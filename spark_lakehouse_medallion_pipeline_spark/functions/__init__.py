@@ -2,6 +2,8 @@ from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (  # noqa
     clean_email,
     clean_phone,
     count_if,
+    floor_round,
+    hex_bigint,
     standardize_city,
     standardize_state,
     uniform,

@@ -40,6 +40,27 @@ def uniform(tag: str, *cols: Column) -> Column:
     return (h.cast("double") / F.lit(float(2**64))) + F.lit(0.5)
 
 
+def floor_round(col: Column, k: int) -> Column:
+    """FLOOR(x*10^k + 0.5)/10^k — the cross-engine-stable round every
+    oracled score uses. Spark round() is BigDecimal HALF_UP on the
+    shortest decimal repr, DuckDB round() is C-style on the binary value,
+    so the two can disagree on the SAME double; this op chain, spelled
+    identically in the oracle (queries.S_FLOOR), cannot."""
+    s = float(10**k)
+    return F.floor(col * s + F.lit(0.5)) / F.lit(s)
+
+
+def hex_bigint(digest: Column, start: int, n: int = 15) -> Column:
+    """The ``n`` hex digits of ``digest`` from 1-based ``start``, read as
+    a bigint — the portable hash every md5-based sketch, sample and
+    pairing uses. DuckDB twin: ``('0x' || substr(h, start, n))::BIGINT``,
+    digit-for-digit. n=15 (60 bits) keeps the value a non-negative signed
+    int64 in every engine; an md5 digest yields two independent 60-bit
+    hashes at start=2 and start=18. Takes the digest, not the input, so
+    one md5 can feed both halves."""
+    return F.conv(F.substring(digest, start, n), 16, 10).cast("bigint")
+
+
 def clean_email(email: Column) -> Column:
     """lower/trim + strip the ``.duplicate`` marker (CM:194)."""
     return F.regexp_replace(F.lower(F.trim(email)), r"\.duplicate", "")

@@ -11,8 +11,17 @@ The LSH path is the canonical web-scale near-dup design (shingling +
 MinHash from Broder '97; banding from Mining of Massive Datasets ch.3):
 documents sharing ANY band bucket become candidate pairs; jaccard on the
 full signature (or token sets) verifies. Everything below is pure Column
-expressions — higher-order array functions, xxhash64 — no Python UDFs, so
-the hot path stays in whole-stage codegen.
+expressions — higher-order array functions, integer hashes — no Python
+UDFs, so the hot path stays in whole-stage codegen.
+
+Two hash families, each operator fixed to one:
+  xxhash64   Spark-specific and cheapest: minhash_lsh_candidates (q33),
+             simhash, fuzzy_pairs, the bloom prefilter. Outputs can only
+             be row-counted or recall-tested against another engine.
+  md5 (60b)  portable: ``functions.scalars.hex_bigint`` over an md5
+             digest reads digit-for-digit like DuckDB's
+             ``('0x' || substr(h, s, 15))::BIGINT``, so the *_portable
+             operators and contrastive_pairs value-oracle end to end.
 """
 
 from __future__ import annotations
@@ -20,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import hex_bigint
 from spark_lakehouse_medallion_pipeline_spark.operators.text import (
     normalized_text,
     whitespace_tokens,
@@ -82,22 +92,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature (array<bigint>, length num_hashes).
-
-    Cost model (the 100 TB concern): shingle strings are built ONCE and
-    hashed to 64-bit base hashes ONCE; the n-hash family then re-hashes
-    only the 8-byte base value (xxhash64(h, seed)). Each of the
-    num_hashes positions is its own flat ``array_min(transform(...))``
-    expression — a nested-lambda form (transform over a seeds array with
-    an inner transform) evaluates interpreted per element and measured
-    ~16x slower than this flat layout. Deterministic everywhere,
-    entirely JVM-side, scan-local (no shuffle).
-    """
-    base = base_shingle_hashes(text, shingle_k)
-    return minhash_from_base(base, num_hashes)
-
-
 def base_shingle_hashes(text: Column, shingle_k: int = 3) -> Column:
     """Each document's shingle set as 64-bit hashes (array<bigint>).
 
@@ -122,20 +116,6 @@ def base_shingle_hashes(text: Column, shingle_k: int = 3) -> Column:
         # mirroring word_shingles' "whatever remains" fallback shingle.
         acc = F.zip_with(acc, shifted, lambda a, b: F.xxhash64(a, b))
     return F.slice(acc, 1, F.greatest(F.size(th) - (shingle_k - 1), F.lit(1)))
-
-
-def minhash_from_base(base_hashes: Column, num_hashes: int = 64) -> Column:
-    """MinHash family over precomputed base hashes: position i is
-    min(xxhash64(h, i)) — integer-only, cheap per extra hash."""
-
-    def position(i: int) -> Column:
-        seed = F.lit(i)
-        # Single-parameter lambda on purpose: a two-parameter lambda
-        # would be called as (element, index) by transform(), silently
-        # replacing the seed with the array index.
-        return F.array_min(F.transform(base_hashes, lambda h: F.xxhash64(h, seed)))
-
-    return F.array(*[position(i) for i in range(num_hashes)])
 
 
 def minhash_signatures(
@@ -280,44 +260,6 @@ def minhash_lsh_candidates(
     return minhash_lsh_candidates_from_signatures(sig, num_hashes, bands)
 
 
-def minhash_jaccard_estimate(
-    docs: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """Verify candidates: estimated jaccard = fraction of matching minhash
-    positions. Joins signatures to both sides of the candidate pairs.
-
-    Pass ``signatures`` (a (_id, _sig) table, ideally persisted) to skip
-    re-shingling the corpus — the dominant cost; without it the corpus
-    is re-signed here via the explode fast path."""
-    sig = (
-        signatures.select(F.col("_id").alias("_sid"), "_sig")
-        if signatures is not None
-        else minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k).select(
-            F.col("_id").alias("_sid"), "_sig"
-        )
-    )
-    a = sig.select(F.col("_sid").alias("id_a"), F.col("_sig").alias("sig_a"))
-    b = sig.select(F.col("_sid").alias("id_b"), F.col("_sig").alias("sig_b"))
-    paired = candidates.join(a, "id_a").join(b, "id_b")
-    matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return paired.select(
-        "id_a",
-        "id_b",
-        (matches.cast("double") / F.lit(float(num_hashes))).alias("jaccard_est"),
-    )
-
-
 def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -326,25 +268,24 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     min_jaccard: float | None = None,
-    persist: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures once -> LSH candidates ->
-    signature-match jaccard estimate.
+    signature-match jaccard estimate (fraction of equal positions).
 
-    With ``persist`` the signature table is cached (MEMORY_AND_DISK), so
-    shingling+hashing — the dominant cost — runs exactly once even though
-    three plan branches consume it (banding, id_a join, id_b join). At
-    100 TB the equivalent move is checkpointing signatures to a table;
-    the plan shape is identical.
+    The signature table is cached (MEMORY_AND_DISK), so shingling+hashing
+    — the dominant cost — runs exactly once even though three plan
+    branches consume it (banding, id_a join, id_b join). At 100 TB the
+    equivalent move is checkpointing signatures to a table; the plan
+    shape is identical.
 
     Returns (id_a, id_b, n_shared_bands, jaccard_est), id_a < id_b.
     """
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     cands = minhash_lsh_candidates_from_signatures(sig, num_hashes, bands, max_bucket)
     a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
     b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
@@ -485,59 +426,6 @@ def ngram_jaccard_pairs(
             (inter.cast("double") / union).alias("jaccard"),
         )
     )
-
-
-def minhash_signatures_pandas(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(_id, _sig) signature table on the Arrow/numpy path.
-
-    Shingling + base hashing stay JVM-side (string work); the n-hash
-    family is a vectorized splitmix64 finalizer over a (shingles x
-    num_hashes) uint64 grid per document — one numpy broadcast instead
-    of num_hashes codegen'd columns. Measured at sf0.1 this does NOT
-    beat minhash_signatures (9s vs 5.6s cold): Arrow list transfer +
-    the per-document Python loop costs more than the one-time codegen
-    compile it avoids. Kept as the reference implementation for
-    environments where codegen is unavailable/hostile; the JVM explode
-    path is the default. Hash family differs from the JVM path
-    (splitmix64 vs xxhash64) — both are uniform 64-bit mixers; pick one
-    per pipeline and stay with it.
-    """
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    base = docs.select(
-        F.col(id_col).alias("_id"),
-        base_shingle_hashes(F.col(text_col), shingle_k).alias("_h"),
-    )
-    out_schema = StructType(
-        [StructField("_id", LongType()), StructField("_sig", ArrayType(LongType()))]
-    )
-
-    def fam(batches):
-        import numpy as np
-        import pandas as pd
-
-        with np.errstate(over="ignore"):
-            seeds = (
-                np.arange(1, num_hashes + 1, dtype=np.uint64)
-                * np.uint64(0x9E3779B97F4A7C15)
-            )
-            for pdf in batches:
-                sigs = []
-                for h in pdf["_h"]:
-                    z = np.asarray(h, dtype=np.int64).astype(np.uint64)[:, None] + seeds
-                    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-                    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-                    z = z ^ (z >> np.uint64(31))
-                    sigs.append(z.min(axis=0).astype(np.int64))
-                yield pd.DataFrame({"_id": pdf["_id"], "_sig": sigs})
-
-    return base.mapInPandas(fam, out_schema)
 
 
 def connected_components(
@@ -926,7 +814,6 @@ def contrastive_pairs(
     bands: int = 16,
     shingle_k: int = 3,
     neg_per_pos: int = 1,
-    portable: bool = False,
     broadcast_distinct_shingles: bool = False,
 ) -> DataFrame:
     """Mine (anchor, other, label) training pairs for embedding /
@@ -951,30 +838,24 @@ def contrastive_pairs(
 
     Returns (id_a, id_b, label) with id_a < id_b.
 
-    ``portable=True`` swaps every hash in the construction — the LSH
-    positives (via ``minhash_lsh_candidates_portable``), the pairing
-    buckets/ranks, and the top-up selection order — from xxhash64 to
-    the 60-bit md5 family, and adds (id_a, id_b) tie-breakers to the
-    selection sort, so the ENTIRE mined set (including how each of the
-    up-to-3 top-up passes fills its deficit) is reproducible
-    digit-for-digit in any engine with md5: the iterative top-up loop
-    value-oracles as unrolled SQL CTEs (q149). Same plan shapes; md5
-    costs ~2x xxhash64 per call, which the fast path (default) avoids.
+    Every hash in the construction — the LSH positives (via
+    ``minhash_lsh_candidates_portable``), the pairing buckets/ranks, and
+    the top-up selection order — is the portable 60-bit md5 family, and
+    the selection sort carries (id_a, id_b) tie-breakers, so the ENTIRE
+    mined set (including how each of the up-to-3 top-up passes fills its
+    deficit) is reproducible digit-for-digit in any engine with md5: the
+    iterative top-up loop value-oracles as unrolled SQL CTEs (q149).
 
-    ``broadcast_distinct_shingles`` passes through to the portable LSH
-    stage (see ``minhash_lsh_candidates_portable``): hash the DISTINCT
-    shingle table once and broadcast-join it back instead of md5-hashing
-    every (doc, shingle) occurrence inline. Same hash values, same
-    candidates — a caller assertion that distinct shingles fit in
-    executor memory (bounded vocabulary or heavy duplication).
+    ``broadcast_distinct_shingles`` passes through to the LSH stage (see
+    ``minhash_lsh_candidates_portable``): hash the DISTINCT shingle table
+    once and broadcast-join it back instead of md5-hashing every (doc,
+    shingle) occurrence inline. Same hash values, same candidates — a
+    caller assertion that distinct shingles fit in executor memory
+    (bounded vocabulary or heavy duplication).
     """
-    pos = (
-        minhash_lsh_candidates_portable(
-            docs, id_col, text_col, num_hashes, bands, shingle_k,
-            broadcast_distinct_shingles=broadcast_distinct_shingles,
-        )
-        if portable
-        else minhash_lsh_candidates(docs, id_col, text_col, num_hashes, bands, shingle_k)
+    pos = minhash_lsh_candidates_portable(
+        docs, id_col, text_col, num_hashes, bands, shingle_k,
+        broadcast_distinct_shingles=broadcast_distinct_shingles,
     )
     # Materialize both reused inputs once: pos_pairs feeds the count,
     # every per-seed anti-join, and the final union; ids feeds one
@@ -995,28 +876,23 @@ def contrastive_pairs(
     n_ids = ids.count()
     n_buckets = max(1, min(64, n_ids // 16))
     target = n_pos * neg_per_pos
-    if portable:
-        # Total selection order (hash, id_a, id_b): the tie-breakers cost
-        # nothing (hash collisions are ~2^-60) but make the selected SET
-        # provably identical across engines, which the oracle needs.
-        sel_order = [
-            _pmd5(
-                F.concat(
-                    F.col("id_a").cast("string"),
-                    F.lit(":"),
-                    F.col("id_b").cast("string"),
-                ),
-                9,
+    # Total selection order (hash, id_a, id_b): the tie-breakers cost
+    # nothing (hash collisions are ~2^-60) but make the selected SET
+    # provably identical across engines, which the oracle needs.
+    sel_order = [
+        _pmd5(
+            F.concat(
+                F.col("id_a").cast("string"),
+                F.lit(":"),
+                F.col("id_b").cast("string"),
             ),
-            F.col("id_a"),
-            F.col("id_b"),
-        ]
-    else:
-        sel_order = [
-            F.xxhash64(F.col("id_a").cast("string"), F.col("id_b").cast("string"))
-        ]
+            9,
+        ),
+        F.col("id_a"),
+        F.col("id_b"),
+    ]
     neg = (
-        _hash_paired(ids, seed=1, n_buckets=n_buckets, portable=portable)
+        _hash_paired(ids, seed=1, n_buckets=n_buckets)
         .join(pos_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
         .orderBy(*sel_order)
         .limit(target)
@@ -1027,7 +903,7 @@ def contrastive_pairs(
         if deficit <= 0:
             break
         topup = (
-            _hash_paired(ids, seed=seed, n_buckets=n_buckets, portable=portable)
+            _hash_paired(ids, seed=seed, n_buckets=n_buckets)
             .join(pos_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
             .join(neg, ["id_a", "id_b"], "left_anti")
             .orderBy(*sel_order)
@@ -1042,31 +918,22 @@ def _pmd5(col, seed: int):
     hex — ``('0x' || substr(md5(x || '#s'), 2, 15))::BIGINT`` in DuckDB,
     digit-for-digit (the q162 family, with a '#' separator so id-hash
     inputs can never collide with shingle-hash inputs)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 2, 15), 16, 10
-    ).cast("bigint")
+    return hex_bigint(F.md5(F.concat(col, F.lit(f"#{seed}"))), 2)
 
 
-def _hash_paired(
-    ids: DataFrame, seed: int, n_buckets: int = 64, portable: bool = False
-) -> DataFrame:
+def _hash_paired(ids: DataFrame, seed: int, n_buckets: int = 64) -> DataFrame:
     """Deterministic pseudo-random disjoint pairing of ``ids['_id']``:
     hash into buckets, rank by a seeded hash inside each bucket, pair
     rank 2k-1 with rank 2k. No global sort, no cross join; different
-    seeds yield (near-)independent pairings for top-up passes.
-    ``portable=True`` uses the md5 hash family (engine-reproducible)
-    instead of xxhash64."""
+    seeds yield (near-)independent pairings for top-up passes. Hashes
+    are the portable md5 family, so the pairing is engine-reproducible."""
     from pyspark.sql import Window
 
     # Seed participates in the BUCKET hash too — with only the ordering
     # seeded, a 2-id bucket would re-produce the identical pair on every
     # seed and the top-up pass could never find fresh candidates.
-    if portable:
-        bkt_hash = _pmd5(F.col("_id").cast("string"), seed * 1000)
-        rank_hash = _pmd5(F.col("_id").cast("string"), seed)
-    else:
-        bkt_hash = F.xxhash64(F.col("_id").cast("string"), F.lit(seed * 1000))
-        rank_hash = F.xxhash64(F.col("_id").cast("string"), F.lit(seed))
+    bkt_hash = _pmd5(F.col("_id").cast("string"), seed * 1000)
+    rank_hash = _pmd5(F.col("_id").cast("string"), seed)
     bucketed = ids.select(
         "_id",
         F.pmod(bkt_hash, F.lit(n_buckets)).alias("_bkt"),
@@ -1336,12 +1203,12 @@ def minhash_lsh_candidates_portable(
     costs n/2 digests (measured ~10% end-to-end at sf0.1 — whole-stage
     codegen's subexpression elimination already de-duplicated repeated
     digests, and the shingle explode + n-column min aggregate dominate;
-    the halving still matters on engines without CSE). Read as decimal
-    via ``conv(substr(md5(x), off, 15), 16, 10)`` here, ``('0x' ||
-    substr(md5(x), off, 15))::BIGINT`` in DuckDB/Trino. 60 bits keeps
-    the value inside a signed int64 in every engine (no unsigned-
-    overflow divergence) while leaving min-hash collision probability
-    negligible. ``num_hashes`` must be even (pairs share a digest).
+    the halving still matters on engines without CSE). Each half is read
+    by ``hex_bigint`` (``('0x' || substr(md5(x), off, 15))::BIGINT`` in
+    DuckDB/Trino). 60 bits keeps the value inside a signed int64 in
+    every engine (no unsigned-overflow divergence) while leaving min-hash
+    collision probability negligible. ``num_hashes`` must be even (pairs
+    share a digest).
 
     Plan shape is identical to the fast path: explode per-doc shingles,
     compute the n-hash family as n codegen'd columns, per-position mins
@@ -1430,15 +1297,9 @@ def minhash_banded_portable(
         return digests.select(
             keep,
             *[
-                F.conv(
-                    F.substring(
-                        F.col(f"_d{i // 2}"), 2 if i % 2 == 0 else 18, 15
-                    ),
-                    16,
-                    10,
+                hex_bigint(F.col(f"_d{i // 2}"), 2 if i % 2 == 0 else 18).alias(
+                    f"_x{i}"
                 )
-                .cast("bigint")
-                .alias(f"_x{i}")
                 for i in range(num_hashes)
             ],
         )
@@ -1497,12 +1358,7 @@ def simhash_portable(
         F.col(id_col).alias("_id"),
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("_w"),
     )
-    hashed = toks.select(
-        "_id",
-        F.conv(F.substring(F.md5(F.col("_w")), 18, 15), 16, 10)
-        .cast("bigint")
-        .alias("_h"),
-    )
+    hashed = toks.select("_id", hex_bigint(F.md5(F.col("_w")), 18).alias("_h"))
     sums = hashed.groupBy("_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         *[

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.functions.scalars import count_if  # noqa: F401  (re-export)
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import hex_bigint
 
 
 def broadcast_dim(dim: DataFrame) -> DataFrame:
@@ -207,8 +208,8 @@ def stratified_exact_sample(
     pure integer arithmetic (rank*den <= n*num), so results are
     bit-identical across engines — float fractions like 0.2 round-trip
     to 0.2000...011 and flip ceil/floor at exact multiples. The hash
-    rank is the portable 60-bit md5 family (``conv(substr(md5(x),18,15),
-    16,10)`` here, ``('0x'||substr(md5(x),18,15))::BIGINT`` in
+    rank is the portable 60-bit md5 family (``hex_bigint(md5(x), 18)``
+    here, ``('0x'||substr(md5(x),18,15))::BIGINT`` in
     DuckDB/Trino): int64-safe for ANY order_col value, unlike a raw
     Knuth multiply which silently wraps (ANSI off) or errors (ANSI on)
     above ~2^31 — exactly the range hash-derived 63-bit ids live in.
@@ -223,9 +224,7 @@ def stratified_exact_sample(
     approximate text.mixture_sample and reserve this for the final
     exact quota pass on the (much smaller) curated output.
     """
-    rank = F.conv(
-        F.substring(F.md5(F.col(order_col).cast("string")), 18, 15), 16, 10
-    ).cast("bigint")
+    rank = hex_bigint(F.md5(F.col(order_col).cast("string")), 18)
     w = Window.partitionBy(*strata_cols).orderBy(rank.asc(), F.col(order_col).asc())
     w_n = Window.partitionBy(*strata_cols)
     return (

@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (SURVEY.md §2b X19, X21).
 
-Two paths:
+Search paths:
   - brute-force cosine top-k: exact baseline. Dot products via
     F.zip_with + F.aggregate in double precision — JVM expressions, no
     UDF, so a scan+project; per-query cost is one pass over the corpus.
   - LSH-bucketed ANN: random-hyperplane signatures (deterministic
-    hyperplanes derived from xxhash64) bucket the corpus; queries probe
-    only their bucket — the 100 TB path, where brute force per query is
-    a full scan and the bucket join is a hash join on a short bit-string.
+    hyperplanes derived from blake2b, _hyperplane_comps) bucket the
+    corpus; queries probe only their bucket — the 100 TB path, where
+    brute force per query is a full scan and the bucket join is a hash
+    join on a short bit-string.
+  - IVF cells, PQ codes and IVF-PQ: cell probes and compressed scans
+    with an exact re-rank.
+
+Every operator an oracled query uses rounds cosine with
+``functions.scalars.floor_round`` at 6dp (FLOOR(x*1e6 + 0.5)/1e6, spelled
+identically in the DuckDB oracles), so the oracle replays every score
+bit-exactly.
 
 Embeddings: array<float> columns (driver corpus: 64-dim, L2-normalized,
 so cosine == dot product; we still normalize defensively).
@@ -17,6 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (
+    floor_round,
+    hex_bigint,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -57,7 +70,7 @@ def cosine_topk_brute(
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = corpus.select(
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
+        floor_round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
     )
     return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
 
@@ -105,7 +118,15 @@ def _hyperplane_comps(dim: int, plane_idx: int, table: int = 0) -> list[float]:
 
 def _dot_lit_sql(vec_sql: str, comps: list[float]) -> str:
     """SQL text for <vec, literal array> — the same zip_with+aggregate
-    tree the Column-combinator form builds, but parsed JVM-side."""
+    tree the Column-combinator form builds, but parsed JVM-side.
+
+    Driver-cost note: the Column-combinator form issues a py4j round trip
+    per lambda conversion and literal element (multi-second plan builds
+    for a centroid table); the textual form is one call and parses to
+    the same SQL-lambda tree, so execution is unchanged. A
+    fully-flattened multiply-add variant (no zip_with) was rejected:
+    768-term trees blow past codegen method limits and fall back to
+    per-node interpretation (~15x slower at runtime)."""
     arr = "array(" + ", ".join(f"{v!r}D" for v in comps) + ")"
     return (
         f"aggregate(zip_with({vec_sql}, {arr},"
@@ -119,44 +140,19 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def rhp_signature(vec: str, dim: int, n_planes: int = 16, table: int = 0) -> Column:
-    """Random-hyperplane (SimHash for cosine) signature: bit i = sign of
-    <vec, plane_i>, packed into a bigint. P[bits agree] = 1 - theta/pi.
-    ``table`` selects an independent plane family (for OR-construction).
-
-    Driver-cost note: built as ONE textual expr. The Column-combinator
-    form issued ~250 py4j round trips per signature (each lambda
-    conversion and literal element is a call; ~0.8 ms/call under gVisor
-    -> multi-second plan builds); the textual form is one call and
-    parses to the same SQL-lambda tree, so execution is unchanged. A
-    fully-flattened multiply-add variant (no zip_with) was rejected:
-    768-term trees blow past codegen method limits and fall back to
-    per-node interpretation (~15x slower at runtime).
-
-    ``vec`` is a COLUMN NAME (not a Column): stringifying a Column tree
-    needs classic-only JVM internals (`_jc`), which Spark Connect lacks —
-    the name form works on both.
-    """
-    vec_sql = _sql_ident(vec)
-    terms = []
-    for i in range(n_planes):
-        dot_sql = _dot_lit_sql(vec_sql, _hyperplane_comps(dim, i, table))
-        terms.append(f"(CASE WHEN {dot_sql} >= 0.0D THEN {2**i}L ELSE 0L END)")
-    return F.expr(" + ".join(terms))
-
-
 def rhp_signature_udf(dim: int, n_planes: int, table: int = 0):
-    """Vectorized (Arrow/numpy) RHP signature: one (batch x dim) @ (dim x
-    n_planes) gemm per Arrow batch, sign bits packed into a bigint.
+    """Random-hyperplane (SimHash for cosine) signature as a vectorized
+    (Arrow/numpy) UDF: bit i = sign of <vec, plane_i>, packed into a
+    bigint, so P[bits agree] = 1 - theta/pi. ``table`` selects an
+    independent plane family (for OR-construction).
 
-    Produces the SAME signature as rhp_signature (both compute the dots
-    in float64; a sign can differ only when |<v, plane>| ~ 1e-16, i.e.
-    measure-zero for real embeddings — verified bit-identical on the
-    driver corpus). ~2x faster at execution than the interpreted
-    SQL-lambda tree and, more importantly, constant-size in the plan:
-    no 50 KB textual expr to parse/analyze/compile per signature, which
-    is where the JVM form pays seconds of driver time. The plane matrix
-    (dim x n_planes floats) ships once in the closure.
+    One (batch x dim) @ (dim x n_planes) gemm per Arrow batch, in float64
+    like the oracles' list_inner_product (a sign can differ only when
+    |<v, plane>| ~ 1e-16, measure-zero for real embeddings). ~2x faster
+    at execution than the interpreted SQL-lambda tree and constant-size
+    in the plan: no 50 KB textual expr to parse/analyze/compile per
+    signature. The plane matrix (dim x n_planes floats) ships once in
+    the closure.
     """
     import numpy as np
     import pandas as pd
@@ -191,13 +187,10 @@ def lsh_knn_join(
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
-    floor6: bool = False,
 ) -> DataFrame:
     """ANN k-NN join: bucket both sides by RHP signature, hash-join on the
-    bucket, exact cosine + top-k inside buckets. ``floor6`` switches the
-    similarity to the cross-engine-stable FLOOR(x*1e6+0.5)/1e6 idiom so
-    a SQL oracle can replay scores bit-exactly (see
-    cosine_near_dup_pairs).
+    bucket, exact cosine + top-k inside buckets (floor_round at 6dp, so
+    a SQL oracle can replay scores bit-exactly — q37).
 
     Recall knobs (standard LSH design space):
       - ``n_tables`` independent plane families (OR-construction): a true
@@ -261,8 +254,7 @@ def lsh_knn_join(
         "_qvec",
         F.explode(F.array_distinct(F.array(*probe_structs))).alias("_b"),
     ).select(q_id, "_qvec", F.col("_b.table").alias("_table"), F.col("_b.sig").alias("_bucket"))
-    raw = cosine(F.col("_cvec"), F.col("_qvec"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6)
     scored = c_sig.join(q_probed, on=["_table", "_bucket"]).select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -297,7 +289,6 @@ def cosine_near_dup_pairs(
     n_tables: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    floor6: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-family variant of
     X19): LSH-block the corpus, generate pairs only inside buckets, keep
@@ -308,16 +299,10 @@ def cosine_near_dup_pairs(
     families recovers pairs that a single table's hyperplanes split.
     Recall for a pair at angle theta is 1-(1-(1-theta/pi)^n_planes)^n_tables.
 
-    Returns (id_a, id_b, cosine_sim), id_a < id_b, exact cosine.
-
-    ``floor6=True`` switches the similarity from round-HALF_UP to the
-    cross-engine-stable FLOOR(x*1e6 + 0.5)/1e6 idiom (Spark round() is
-    BigDecimal HALF_UP on the shortest decimal repr, other engines'
-    round() is C-style on the binary value — they can disagree on the
-    SAME double), which is what lets a SQL oracle reproduce the output
-    bit-exactly: the hyperplanes themselves are deterministic
-    blake2b-derived literals (_hyperplane_comps), so an oracle can
-    inline them and replay the bucketing.
+    Returns (id_a, id_b, cosine_sim), id_a < id_b, exact cosine under
+    floor_round at 6dp. A SQL oracle reproduces the output bit-exactly
+    (q44): the hyperplanes are deterministic blake2b-derived literals
+    (_hyperplane_comps) it can inline to replay the bucketing.
     """
     sides = []
     for suffix in ("a", "b"):
@@ -348,8 +333,7 @@ def cosine_near_dup_pairs(
         )
         sides.append(sig)
     a, b = sides
-    raw = cosine(F.col("_vec_a"), F.col("_vec_b"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = floor_round(cosine(F.col("_vec_a"), F.col("_vec_b")), 6)
     return (
         a.join(b, on=["_table", "_bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -396,13 +380,12 @@ def cosine_pairs_exact(
     )
     a = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    floor6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         a.join(b, a.id_a < b.id_b)
         .select(
             "id_a",
             "id_b",
-            floor6(dot(F.col("_va"), F.col("_vb"))).alias("cosine_sim"),
+            floor_round(dot(F.col("_va"), F.col("_vb")), 6).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -416,26 +399,26 @@ def ivf_centroids(
     portable: bool = False,
 ) -> list[list[float]]:
     """Deterministic IVF 'training': pick n_centroids corpus vectors by
-    lowest xxhash64(id) (a reproducible uniform sample — no iterative
+    lowest hash of the id (a reproducible uniform sample — no iterative
     k-means, which buys little on normalized web-scale embeddings) and
     L2-normalize them driver-side. The collect is n_centroids rows — the
     model, not the data.
 
-    ``portable=True`` makes the whole model SQL-replayable (the q162
-    portable-hash + q44 literal-planes discipline): the sample order is
-    the portable 60-bit md5 hash instead of Spark xxhash64, and the
-    normalized components are quantized to the e6 grid with the
-    cross-engine FLOOR idiom — math.sqrt and the sequential
-    sum-of-squares are IEEE-identical to SQL sqrt + list_reduce, and
-    the e6 floor absorbs any remaining ulp, so an oracle can rebuild
-    the exact centroid table from the data."""
+    ``portable`` picks the model's two callers apart. True (ivf_knn_join,
+    semantic_dedup — oracled q45/q96) makes the whole model
+    SQL-replayable: the sample order is the portable 60-bit md5 hash
+    (hex_bigint), and the normalized components are quantized to the e6
+    grid with the cross-engine FLOOR idiom — math.sqrt and the sequential
+    sum-of-squares are IEEE-identical to SQL sqrt + list_reduce, and the
+    e6 floor absorbs any remaining ulp, so an oracle can rebuild the
+    exact centroid table from the data. False (ivfpq_knn_join, q143,
+    whose PQ stage is not oracle-replayable anyway) orders by xxhash64
+    and keeps the unquantized unit vectors."""
+    id_str = F.col(id_col).cast("string")
     if portable:
-        order = F.expr(
-            f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 2, 15), 16, 10)"
-            " AS BIGINT)"
-        )
+        order = hex_bigint(F.md5(id_str), 2)
     else:
-        order = F.xxhash64(F.col(id_col).cast("string"))
+        order = F.xxhash64(id_str)
     rows = (
         corpus.select(F.col(id_col), F.col(vec_col))
         .orderBy(order, F.col(id_col))
@@ -461,8 +444,10 @@ def _centroid_scores(vec: str, cents: list[list[float]]) -> Column:
     """array<struct<score,cid>> of cosine-rank scores against normalized
     centroids. Centroids are unit vectors, so dot(vec, c) ranks identically
     to cosine for a fixed vec — no per-row norm needed. One textual expr
-    for the whole array (see rhp_signature's driver-cost note). ``vec``
-    is a column name (Connect-safe; see rhp_signature)."""
+    for the whole array (see _dot_lit_sql's driver-cost note). ``vec``
+    is a COLUMN NAME, not a Column: stringifying a Column tree needs
+    classic-only JVM internals (`_jc`), which Spark Connect lacks — the
+    name form works on both."""
     vec_sql = _sql_ident(vec)
     structs = [
         f"struct({_dot_lit_sql(vec_sql, c)} AS score, {i} AS cid)"
@@ -481,12 +466,10 @@ def ivf_knn_join(
     q_id: str = "q_id",
     c_id: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
-    floor6: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) ANN k-NN join — the cell-probe alternative to
-    lsh_knn_join. ``portable``/``floor6`` make the index and the scores
-    SQL-replayable (see ivf_centroids / cosine_near_dup_pairs).
+    lsh_knn_join. The index (portable ivf_centroids) and the floor_round
+    scores are SQL-replayable (q45).
 
     Index: every corpus vector is assigned to its nearest centroid's cell
     (scan-local argmax over n_centroids dot products). Search: each query
@@ -497,7 +480,7 @@ def ivf_knn_join(
     """
     from pyspark.sql import Window
 
-    cents = ivf_centroids(corpus, n_centroids, c_id, vec_col, portable=portable)
+    cents = ivf_centroids(corpus, n_centroids, c_id, vec_col, portable=True)
     c_cell = corpus.select(
         F.col(c_id),
         F.col(vec_col).alias("_cvec"),
@@ -512,8 +495,7 @@ def ivf_knn_join(
         F.col(vec_col).alias("_qvec"),
         F.explode(probed).alias("_probe"),
     ).select(q_id, "_qvec", F.col("_probe.cid").alias("_cell"))
-    raw = cosine(F.col("_cvec"), F.col("_qvec"))
-    sim = _floor_round6(raw) if floor6 else F.round(raw, 6)
+    sim = floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6)
     scored = c_cell.join(q_cell, on="_cell").select(
         F.col(q_id), F.col(c_id), sim.alias("cosine_sim")
     )
@@ -609,7 +591,6 @@ def semantic_dedup(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     embeddings, compare pairs only WITHIN a cluster, and drop every
@@ -623,9 +604,14 @@ def semantic_dedup(
     centroid count; at 100 TB raise n_centroids so cells stay ~1/k of
     the corpus, or re-cluster hot cells recursively.
 
+    The centroid model is the portable one and the pair dot is e6-floored
+    before the threshold compare, so a SQL oracle (q96) replays every
+    drop decision: its summation-order ulps cannot flip a pair at the
+    boundary.
+
     Returns surviving rows of ``corpus`` (all original columns).
     """
-    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, portable=portable)
+    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, portable=True)
     assigned = corpus.withColumn(
         "_cell", F.array_max(_centroid_scores(vec_col, cents))["cid"]
     )
@@ -639,13 +625,7 @@ def semantic_dedup(
     )
     a = e.select(F.col("_id").alias("id_a"), F.col("_cell"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_cell"), F.col("_v").alias("_vb"))
-    pair_dot = dot(F.col("_va"), F.col("_vb"))
-    if portable:
-        # e6-floor the pair dot before the threshold compare so a SQL
-        # oracle's summation-order ulps can't flip a drop decision at
-        # the boundary (the q37/q44/q45 absorber; raw-double compare
-        # was this family's only unabsorbed threshold).
-        pair_dot = _floor_round6(pair_dot)
+    pair_dot = floor_round(dot(F.col("_va"), F.col("_vb")), 6)
     dropped = (
         a.join(b, on="_cell")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -807,14 +787,6 @@ def pq_codebooks(
     return books
 
 
-def _floor_round6(col: Column) -> Column:
-    """FLOOR(x*1e6 + 0.5)/1e6 — the cross-engine-stable round used by the
-    oracle gate (matches queries.floor_round / S_FLOOR op-for-op, so a
-    DuckDB oracle reproduces the value bit-identically; plain round()
-    disagrees with SQL engines on negative midpoints)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-
 def exact_rerank(
     cand_ids: DataFrame,
     queries: DataFrame,
@@ -850,7 +822,7 @@ def exact_rerank(
         .select(
             q_id,
             c_id,
-            _floor_round6(cosine(F.col("_cvec"), F.col("_qvec"))).alias("cosine_sim"),
+            floor_round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cosine_sim"),
         )
     )
     w_k = Window.partitionBy(q_id).orderBy(F.desc("cosine_sim"), F.col(c_id))
@@ -878,7 +850,7 @@ def pq_encode_udf(books: list[list[list[float]]]):
     form is n_subspaces * n_codes * sub_dim arithmetic terms (4096 at
     the 4x64x16 defaults), which blows past janino's method limits,
     falls back to per-node interpretation, and pays seconds of
-    parse/analyze time per plan — the same trap rhp_signature's
+    parse/analyze time per plan — the same trap _dot_lit_sql's
     docstring documents. Here each Arrow batch does one
     ||x||^2 - 2xC' + ||c||^2 gemm per subspace and an argmin."""
     import numpy as np

@@ -30,7 +30,11 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spark_lakehouse_medallion_pipeline_spark.functions.scalars import count_if
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (
+    count_if,
+    floor_round,
+    hex_bigint,
+)
 from spark_lakehouse_medallion_pipeline_spark.operators import (
     dedup,
     relational,
@@ -168,12 +172,6 @@ def mean_cents(col: Column) -> Column:
     """Exact-cents average: (sum_cents / n) / 100 — identical op chain in
     the oracle."""
     return sum_cents(col).cast("double") / F.count(F.lit(1)) / F.lit(100.0)
-
-
-def floor_round(col: Column, k: int) -> Column:
-    """FLOOR(x*10^k + 0.5)/10^k — the cross-engine-stable round."""
-    s = float(10**k)
-    return F.floor(col * s + F.lit(0.5)) / F.lit(s)
 
 
 # SQL-side macros (textual, spelled to match the Column helpers op-for-op)
@@ -1109,18 +1107,14 @@ def q32_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q36_knn_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (X19 baseline): one corpus scan, per-
-    partition heap (TakeOrderedAndProject). Query vector looked up first
-    (tiny collect of one row — the query, not the corpus). floor-round at
-    6dp absorbs engine-internal summation-order ulps."""
+    """Brute-force cosine top-k (X19 baseline) via
+    similarity.cosine_topk_brute: one corpus scan, per-partition heap
+    (TakeOrderedAndProject). Query vector looked up first (tiny collect
+    of one row — the query, not the corpus). floor-round at 6dp absorbs
+    engine-internal summation-order ulps."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    q = F.array(*[F.lit(v) for v in qvec])
-    scored = emb.filter(F.col("vec_id") != 0).select(
-        "vec_id",
-        floor_round(similarity.cosine(F.col("embedding"), q), 6).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.col("vec_id")).limit(10)
+    return similarity.cosine_topk_brute(emb.filter(F.col("vec_id") != 0), qvec, k=10)
 
 
 def _rhp_bucket_sql(dim: int, n_planes: int, table: int) -> str:
@@ -1195,9 +1189,7 @@ def q37_lsh_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return similarity.lsh_knn_join(
-        queries, emb, dim=64, k=5, n_planes=8, floor6=True
-    )
+    return similarity.lsh_knn_join(queries, emb, dim=64, k=5, n_planes=8)
 
 
 @_q(
@@ -1485,11 +1477,11 @@ def q44_cosine_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-oracled since round 7: the hyperplanes are deterministic
     literals the oracle replays (_rhp_bucket_sql) and the similarity
     uses the cross-engine floor6 idiom instead of Spark HALF_UP
-    rounding (floor6=True), so bucketing AND scores hash-compare
-    exactly — the q189 cosine discipline applied to the LSH path."""
+    rounding, so bucketing AND scores hash-compare exactly — the q189
+    cosine discipline applied to the LSH path."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.cosine_near_dup_pairs(
-        emb, dim=64, threshold=0.3, n_planes=6, n_tables=2, floor6=True
+        emb, dim=64, threshold=0.3, n_planes=6, n_tables=2
     )
 
 
@@ -1562,8 +1554,7 @@ def q45_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), "embedding"
     )
     return similarity.ivf_knn_join(
-        queries, emb, dim=64, k=5, n_centroids=16, n_probes=4,
-        portable=True, floor6=True,
+        queries, emb, dim=64, k=5, n_centroids=16, n_probes=4
     )
 
 
@@ -2814,11 +2805,7 @@ def q76_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; at 100 TB the filter pipelines inside the scan stage."""
     ev = _t(spark, sf_dir, "events")
     u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("strat"), F.col("event_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        hex_bigint(F.md5(F.concat(F.lit("strat"), F.col("event_id").cast("string"))), 1, 8)
         % 10000
     )
     thresh = F.lit(0)
@@ -3690,7 +3677,6 @@ def q96_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("vec_id", "embedding"),
         threshold=0.98,
         n_centroids=8,
-        portable=True,
     ).select("vec_id")
 
 
@@ -6238,8 +6224,8 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label pair counts and mean token-set jaccard (positives must
     separate from negatives — also pinned in pytest).
 
-    Value-oracled since round 8 (was rows-only for 7 rounds): the query
-    runs ``portable=True`` — md5 hashes everywhere (LSH positives =
+    Value-oracled since round 8 (was rows-only for 7 rounds): the
+    operator hashes with md5 everywhere (LSH positives =
     the q162 family; pairing buckets/ranks and top-up selection order =
     seeded 60-bit md5 with (id_a, id_b) tie-breaks) — and the oracle
     UNROLLS THE ITERATIVE TOP-UP LOOP as CTEs (the q188/q191/q192
@@ -6249,9 +6235,7 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's early break). Audit metrics are exact integers: per
     pair j6 = 1e6*|inter| // |union|, per label mean = SUM(j6) //
     COUNT — truncating integer divides both engines share (trunc ==
-    floor here, all non-negative). The xxhash64 fast path stays the
-    production default (2x cheaper hashing) with determinism + label
-    separation pytest-pinned."""
+    floor here, all non-negative)."""
     from spark_lakehouse_medallion_pipeline_spark.operators.dedup import (
         contrastive_pairs,
     )
@@ -6264,8 +6248,7 @@ def q149_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrence. Identical hash values => identical mined pairs; the
     # unrolled-CTE oracle re-proves it. 2.7x on the LSH stage (r15).
     pairs = contrastive_pairs(
-        docs, num_hashes=16, bands=4, shingle_k=2, portable=True,
-        broadcast_distinct_shingles=True,
+        docs, num_hashes=16, bands=4, shingle_k=2, broadcast_distinct_shingles=True
     )
     toks = docs.select(
         F.col("doc_id"),
@@ -6959,21 +6942,15 @@ def q164_pseudonymize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     would surface as n_real_ids > 1 in BOTH engines rather than
     silently skewing downstream counts.
 
-    Portable-hash trick shared with q162: conv(substr(md5(x), 18, 15),
-    16, 10) here == ('0x' || ...)::BIGINT in DuckDB, so the driver
+    Portable-hash trick shared with q162: hex_bigint(md5(x), 18) here
+    == ('0x' || substr(md5(x), 18, 15))::BIGINT in DuckDB, so the driver
     value-hashes the full mapping. One map-side-combined aggregate on a
     well-spread 60-bit key; TakeOrderedAndProject top-100."""
     ev = _t(spark, sf_dir, "events")
     p = ev.select(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("v1:"), F.col("user_id").cast("string"))), 18, 15
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("pseudo_id"),
+        hex_bigint(
+            F.md5(F.concat(F.lit("v1:"), F.col("user_id").cast("string"))), 18
+        ).alias("pseudo_id"),
         "user_id",
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
@@ -7232,11 +7209,7 @@ def q169_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFram
         "k", (F.col("n_o") * F.col("n_c")).alias("prod")
     )
     exact = joined.agg(F.sum("prod").cast("bigint").alias("actual_rows"))
-    khash = F.conv(
-        F.substring(F.md5(F.concat(F.lit("s:"), F.col("k").cast("string"))), 18, 15),
-        16,
-        10,
-    ).cast("bigint")
+    khash = hex_bigint(F.md5(F.concat(F.lit("s:"), F.col("k").cast("string"))), 18)
     sampled = joined.filter(khash % 16 == 0).agg(
         (F.lit(16) * F.sum("prod")).cast("bigint").alias("est_rows")
     )
@@ -8045,12 +8018,7 @@ def q183_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 similarity.cosine(F.col("embedding"), F.col("qv")), 6
             ).alias("sim"),
             (
-                F.conv(
-                    F.substring(F.md5(F.col("vec_id").cast("string")), 18, 15),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 4
+                hex_bigint(F.md5(F.col("vec_id").cast("string")), 18) % 4
                 == 0
             ).alias("sampled"),
         )
@@ -8694,11 +8662,7 @@ def q195_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k applies within every partition."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 1)
     u = (
-        F.expr(
-            "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 2, 15), 16, 10)"
-            " AS BIGINT)"
-        )
-        + F.lit(1)
+        hex_bigint(F.md5(F.col("doc_id").cast("string")), 2) + F.lit(1)
     ) / F.lit(float(2**60))
     k = docs.select(
         "source",
@@ -12239,13 +12203,7 @@ def q239_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _bucket(col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(col.cast("string"), F.lit("#split"))), 2, 15
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            hex_bigint(F.md5(F.concat(col.cast("string"), F.lit("#split"))), 2)
             % 10
         )
 
@@ -14627,17 +14585,9 @@ def q265_weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFra
     d = docs.select(
         "doc_id",
         F.col("n_chars").cast("bigint").alias("w"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wss:"), F.col("doc_id").cast("string"))),
-                18,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        hex_bigint(
+            F.md5(F.concat(F.lit("wss:"), F.col("doc_id").cast("string"))), 18
+        ).alias("h"),
     )
     c = distributed_rank(
         d,
@@ -15455,9 +15405,7 @@ def q274_consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFram
     free on these fixed rings (pinned in pytest), so the position
     join is exact."""
     cu = _t(spark, sf_dir, "customer")
-    h60 = lambda col: F.conv(F.substring(F.md5(col), 18, 15), 16, 10).cast(  # noqa: E731
-        "bigint"
-    )
+    h60 = lambda col: hex_bigint(F.md5(col), 18)  # noqa: E731
 
     def ring(n_shards: int) -> DataFrame:
         s = spark.range(n_shards).select(F.col("id").cast("int").alias("shard"))
@@ -16657,13 +16605,19 @@ def q282_replica_divergence_audit(spark: SparkSession, sf_dir: str) -> DataFrame
                 Window.partitionBy("ok", "ln", "pk", "sk").orderBy("qc", "pc")
             )
             .alias("seq"),
-            F.expr(
-                "CAST(conv(substr(md5(concat('rck:', ok, ':', ln, ':', pk,"
-                " ':', sk, ':', qc, ':', pc)), 25, 8), 16, 10) AS BIGINT)"
+            hex_bigint(
+                F.expr(
+                    "md5(concat('rck:', ok, ':', ln, ':', pk,"
+                    " ':', sk, ':', qc, ':', pc))"
+                ),
+                25,
+                8,
             ).alias("fp"),
-            F.expr(
-                "CAST(conv(substr(md5(concat('rbk:', ok, ':', ln, ':', pk,"
-                f" ':', sk)), 18, 15), 16, 10) AS BIGINT) % {_Q282_BUCKETS}"
+            (
+                hex_bigint(
+                    F.expr("md5(concat('rbk:', ok, ':', ln, ':', pk, ':', sk))"), 18
+                )
+                % _Q282_BUCKETS
             ).alias("bkt"),
         )
 
@@ -16880,9 +16834,13 @@ def q283_majority_vote_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.partitionBy("ok", "ln", "pk", "sk").orderBy("qc", "pc")
             )
             .alias("seq"),
-            F.expr(
-                "CAST(conv(substr(md5(concat('rck:', ok, ':', ln, ':', pk,"
-                " ':', sk, ':', qc, ':', pc)), 25, 8), 16, 10) AS BIGINT)"
+            hex_bigint(
+                F.expr(
+                    "md5(concat('rck:', ok, ':', ln, ':', pk,"
+                    " ':', sk, ':', qc, ':', pc))"
+                ),
+                25,
+                8,
             ).alias(name),
         )
 
@@ -17773,13 +17731,7 @@ def q288_bloom_zone_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _pos(salt_col: Column, key_col: Column) -> Column:
         return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(salt_col, key_col.cast("string"))), 18, 15
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            hex_bigint(F.md5(F.concat(salt_col, key_col.cast("string"))), 18)
             % _Q288_BITS
         )
 

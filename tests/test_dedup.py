@@ -51,13 +51,8 @@ def test_minhash_lsh_finds_near_dups(toy_docs):
 
 def test_minhash_jaccard_tracks_exact(toy_docs):
     """LSH jaccard estimate within 0.25 of exact token jaccard."""
-    cands = dedup.minhash_lsh_candidates(toy_docs, num_hashes=128, bands=32, shingle_k=1)
-    est = {
-        (r["id_a"], r["id_b"]): r["jaccard_est"]
-        for r in dedup.minhash_jaccard_estimate(
-            toy_docs, cands, num_hashes=128, shingle_k=1
-        ).collect()
-    }
+    cands = dedup.minhash_near_dup_pairs(toy_docs, num_hashes=128, bands=32, shingle_k=1)
+    est = {(r["id_a"], r["id_b"]): r["jaccard_est"] for r in cands.collect()}
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(toy_docs, cands.select("id_a", "id_b")).collect()
@@ -98,29 +93,6 @@ def test_lsh_scales_on_corpus(documents):
     cands = dedup.minhash_lsh_candidates(documents, num_hashes=32, bands=8)
     m = cands.count()
     assert m < n * 20
-
-
-def test_pandas_minhash_tracks_jvm_family(documents):
-    """splitmix64 family must estimate jaccard like the xxhash64 family:
-    band-candidate pairs from one family score similarly in the other."""
-    docs = documents.limit(200)
-    jvm = dedup.minhash_signatures(docs)
-    pnd = dedup.minhash_signatures_pandas(docs)
-    cands_jvm = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_candidates_from_signatures(jvm).collect()
-    }
-    cands_pnd = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_candidates_from_signatures(pnd).collect()
-    }
-    # Same banding scheme over equally-uniform families: candidate sets
-    # overlap heavily (identical docs collide in every family).
-    if cands_jvm or cands_pnd:
-        inter = len(cands_jvm & cands_pnd)
-        union = len(cands_jvm | cands_pnd)
-        assert inter / union >= 0.6, (inter, union)
-    assert pnd.count() == docs.count()
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -443,16 +415,15 @@ def test_contrastive_pairs_topup_restores_balance(spark):
 
 
 def test_contrastive_pairs_portable_topup_balance(spark):
-    """portable=True (the q149 value-oracle path) must keep the top-up
-    contract with the md5 hash family: exact neg_per_pos balance,
+    """The md5 hash family (the q149 value-oracle path) must keep the
+    top-up contract at the q149 band settings: exact neg_per_pos balance,
     disjoint label sets, determinism across runs. Docs 1/2 are exact
-    duplicates so LSH positivity is certain (every band key equal),
-    independent of which hash family is in play."""
+    duplicates so LSH positivity is certain (every band key equal)."""
     near = [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")]
     fillers = [(i, f"w{i}a w{i}b w{i}c w{i}d") for i in range(10, 30)]
     df = spark.createDataFrame(near + fillers, "doc_id long, text string")
     mine = lambda: dedup.contrastive_pairs(  # noqa: E731
-        df, num_hashes=16, bands=4, shingle_k=2, neg_per_pos=3, portable=True
+        df, num_hashes=16, bands=4, shingle_k=2, neg_per_pos=3
     ).collect()
     pairs = mine()
     pos_set = {(r["id_a"], r["id_b"]) for r in pairs if r["label"] == 1}

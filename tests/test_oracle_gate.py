@@ -8,11 +8,12 @@ These tests pin the dtype gate that now catches that class locally.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools"))
 
 from oracle_check import arrow_kind, dtype_problems, spark_kind  # noqa: E402
 

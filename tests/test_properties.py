@@ -243,16 +243,22 @@ def test_fuzzy_pairs_match_naive_levenshtein(spark, names, d):
         max_size=20,
     )
 )
-@settings(max_examples=50, deadline=None)
-def test_portable_hash_duckdb_semantics(strings):
+@settings(
+    max_examples=50,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_portable_hash_duckdb_semantics(spark, strings):
     """The cross-engine contract every portable-hash oracle (q162, q164,
     q165) rests on: DuckDB's ('0x' || substr(md5(s), off, 15))::BIGINT
-    equals the mathematical int(md5_hex[off-1 : off+14], 16) for BOTH
-    digest halves, over arbitrary unicode (Spark's conv() side is pinned
-    by the value-hashing oracle gate itself)."""
+    and Spark's scalars.hex_bigint(md5(s), off) both equal the
+    mathematical int(md5_hex[off-1 : off+14], 16) for BOTH digest
+    halves, over arbitrary unicode."""
     import hashlib
 
     import duckdb
+
+    from spark_lakehouse_medallion_pipeline_spark.functions.scalars import hex_bigint
 
     con = duckdb.connect()
     con.execute("CREATE TABLE t (s VARCHAR)")
@@ -261,6 +267,14 @@ def test_portable_hash_duckdb_semantics(strings):
         "SELECT s, ('0x' || substr(md5(s), 2, 15))::BIGINT,"
         " ('0x' || substr(md5(s), 18, 15))::BIGINT FROM t"
     ).fetchall()
+    d = F.md5(F.col("s"))
+    rows += [
+        tuple(r)
+        for r in spark.createDataFrame([(s,) for s in strings], "s string")
+        .select("s", hex_bigint(d, 2), hex_bigint(d, 18))
+        .collect()
+    ]
+    assert len(rows) == 2 * len(strings)
     for s, hi, lo in rows:
         hx = hashlib.md5(s.encode("utf-8")).hexdigest()
         assert hi == int(hx[1:16], 16)

@@ -86,3 +86,28 @@ def test_string_fns_without_duckdb_counterpart(spark):
     assert r["o"] == "hXXlo"
     assert r["i"] == "Hello World"
     assert r["s1"] == "R163" and r["s1"] == r["s2"]  # classic soundex pair
+
+
+def test_floor_round_midpoints_match_duckdb(spark):
+    """floor_round is the rounding rule every oracled score relies on:
+    on positive and negative halves it must equal DuckDB's spelling of
+    the same op chain (queries.S_FLOOR) bit-for-bit — Spark's HALF_UP
+    round() does not (it rounds -0.0000005 away from zero)."""
+    import duckdb
+
+    from spark_lakehouse_medallion_pipeline_spark.queries import S_FLOOR
+
+    xs = [5e-7, -5e-7, 1.2345665, -1.2345665, 1.5e-6, -1.5e-6, 0.1234565, 2.0000005, 0.0]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    got = [
+        r["r"]
+        for r in df.orderBy("i").select(scalars.floor_round(F.col("x"), 6).alias("r")).collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(xs)))
+    want = [r[0] for r in con.sql(f"SELECT {S_FLOOR('x', 6)} FROM t ORDER BY i").fetchall()]
+    assert [x.hex() for x in got] == [x.hex() for x in want]
+    assert got[1] == 0.0 and got[0] == 1e-6
+    half_up = df.filter(F.col("i") == 1).select(F.round("x", 6).alias("r")).head()["r"]
+    assert half_up == -1e-6

@@ -62,7 +62,7 @@ def test_lsh_recall_vs_brute(embeddings):
 
 def test_rhp_signature_deterministic(embeddings):
     sig = embeddings.limit(20).select(
-        "vec_id", similarity.rhp_signature("embedding", 64, 8).alias("s")
+        "vec_id", similarity.rhp_signature_udf(64, 8)("embedding").alias("s")
     )
     a = sorted(map(tuple, sig.collect()))
     b = sorted(map(tuple, sig.collect()))
@@ -312,11 +312,17 @@ def test_portable_ivf_model_matches_default_semantics(spark, embeddings):
     keep the operator semantics: planted near-identical vector still
     dropped by semantic_dedup, self-pairs still recovered by
     ivf_knn_join, and the portable centroid components sit exactly on
-    the e6 grid (the property the SQL oracle rebuild relies on)."""
+    the e6 grid (the property the SQL oracle rebuild relies on). An id
+    column whose name needs quoting builds the same model."""
     cents = similarity.ivf_centroids(embeddings, n_centroids=4, portable=True)
     for c in cents:
         for x in c:
             assert abs(round(x * 1e6) - x * 1e6) < 1e-9, x
+    spaced = embeddings.withColumnRenamed("vec_id", "vec id")
+    assert (
+        similarity.ivf_centroids(spaced, n_centroids=4, id_col="vec id", portable=True)
+        == cents
+    )
 
     base = [float(x) for x in embeddings.filter(F.col("vec_id") == 7).head()["embedding"]]
     tweaked = list(base)
@@ -327,9 +333,7 @@ def test_portable_ivf_model_matches_default_semantics(spark, embeddings):
     corpus = embeddings.select("vec_id", "embedding").union(planted)
     kept = {
         r["vec_id"]
-        for r in similarity.semantic_dedup(
-            corpus, threshold=0.999, portable=True
-        ).collect()
+        for r in similarity.semantic_dedup(corpus, threshold=0.999).collect()
     }
     assert 200001 not in kept and 7 in kept
 
@@ -339,8 +343,7 @@ def test_portable_ivf_model_matches_default_semantics(spark, embeddings):
     got = {
         (r["q_id"], r["vec_id"])
         for r in similarity.ivf_knn_join(
-            qs, embeddings, dim=64, k=5, n_centroids=8, n_probes=4,
-            portable=True, floor6=True,
+            qs, embeddings, dim=64, k=5, n_centroids=8, n_probes=4
         ).collect()
     }
     assert all((q, q) in got for q in range(10))
