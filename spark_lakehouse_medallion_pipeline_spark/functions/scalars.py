@@ -50,6 +50,32 @@ def floor_round(col: Column, k: int) -> Column:
     return F.floor(col * s + F.lit(0.5)) / F.lit(s)
 
 
+# Exact-cents money rule: 2-decimal doubles are aggregated as exact
+# integer hundredths and rebuilt with one division, so a total does not
+# depend on summation order (round(sum(double), 2) does). SQL twins:
+# queries.SC / S_MONEY / S_MEAN, spelled op-for-op.
+
+
+def cents(col: Column) -> Column:
+    """2-decimal double -> exact integer hundredths."""
+    return F.round(col * 100).cast("long")
+
+
+def sum_cents(col: Column) -> Column:
+    return F.sum(cents(col))
+
+
+def money(sum_cents_col: Column) -> Column:
+    """Exact cent-sum -> double dollars (single division, bit-stable)."""
+    return sum_cents_col.cast("double") / F.lit(100.0)
+
+
+def mean_cents(col: Column) -> Column:
+    """Exact-cents average: (sum_cents / n) / 100 — identical op chain in
+    the oracle."""
+    return sum_cents(col).cast("double") / F.count(F.lit(1)) / F.lit(100.0)
+
+
 def hex_bigint(digest: Column, start: int, n: int = 15) -> Column:
     """The ``n`` hex digits of ``digest`` from 1-based ``start``, read as
     a bigint — the portable hash every md5-based sketch, sample and

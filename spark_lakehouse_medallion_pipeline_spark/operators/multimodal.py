@@ -3,12 +3,15 @@
 Images / audio / video ride as opaque ``binary`` columns with a typed
 metadata struct. The Spark-side machinery — schema, partition sizing,
 Arrow-batched mapInPandas, output shapes — is real and tested, and five
-codecs are REAL stdlib+numpy implementations in this file: BMP (``_bmp_*``),
-WAV (``_wav_*``), PNG (zlib inflate + all five filter types), GIF (LZW),
-and baseline JPEG (T.81 canonical Huffman + orthonormal DCT). Only the
-``_fake_decode_dims`` / ``resize_images`` demo path and the MP3 / H.264
-entries remain stubs (no stdlib codec exists for those formats), each
-clearly marked at its definition.
+codecs are REAL stdlib+numpy implementations in this file: BMP
+(``bmp_encode``/``bmp_decode``), WAV (``wav_encode``/``wav_decode``), PNG
+(zlib inflate + all five filter types), GIF (LZW), and baseline JPEG (T.81
+canonical Huffman + orthonormal DCT). Image codecs plug into one
+synthesize/extract pair (``synthesize_media_blobs`` /
+``extract_image_features_codec``). Only the ``_fake_decode_dims`` demo path
+(``extract_image_features``) and the byte-slice ``sample_frames`` remain
+stubs, each clearly marked at its definition; MP3 / H.264 have no codec
+here (no stdlib path exists for those formats).
 
 Batch-shape note for 100 TB: blobs are large, so these operators must
 bound ``spark.sql.files.maxPartitionBytes`` / use maxRecordsPerBatch to
@@ -133,58 +136,17 @@ def sample_frames(media: DataFrame, every_n_bytes: int = 256, max_frames: int = 
     return media.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("blob", BinaryType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Resize stage (driver mandate: decode / feature-extract / RESIZE /
-    frame-sample). Plumbing real — Arrow-batched mapInPandas, binary in /
-    binary out, byte volume scaled to the target dims so downstream
-    sizing math is honest; the pixel resample itself is STUBBED with a
-    deterministic byte fold (no image libs in this container — swap
-    `_fake_resize` for PIL/cv2 in production)."""
-
-    def _fake_resize(blob: bytes) -> bytes:
-        target = max(1, (width * height) // 8)
-        if not blob:
-            return b"\x00" * target
-        reps = (target // len(blob)) + 1
-        return (blob * reps)[:target]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "blob": [_fake_resize(b) for b in pdf["blob"]],
-                }
-            )
-
-    return media.select("media_id", "blob").mapInPandas(fn, RESIZED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL codecs — formats decodable with stdlib + numpy alone
 # ---------------------------------------------------------------------------
-# BMP (uncompressed 24-bit BI_RGB), WAV (PCM16, stdlib `wave`), and PNG
+# BMP (uncompressed 24-bit BI_RGB), WAV (PCM16, stdlib `wave`), PNG
 # (8-bit RGB non-interlaced: chunk walk + CRC32 + stdlib zlib DEFLATE +
-# all five per-row unfilters, functions at the end of this module) need
-# no external libraries, so for these three formats the whole pipeline —
-# synthesize, decode, feature-extract, box-resize — is REAL end to end.
-# Baseline JPEG joined them in round 8 (DCT+Huffman from the T.81 spec,
-# further down this module). MP3/H.264 remain the documented
-# environment stubs above (no stdlib path to those codecs); swapping
-# them in changes only the per-row codec call, none of the Spark
-# plumbing.
+# all five per-row unfilters), GIF (LZW) and baseline JPEG (DCT+Huffman
+# from the T.81 spec, further down this module) need no external
+# libraries, so synthesize, decode and feature-extract are REAL end to
+# end for every one of them; BMP also has a REAL box-resize
+# (resize_images_bmp). MP3/H.264 have no stdlib path; adding a codec
+# changes only the per-row codec call, none of the Spark plumbing.
 
 
 def bmp_encode(arr) -> bytes:
@@ -270,35 +232,6 @@ def wav_decode(blob: bytes):
     return rate, ch, a
 
 
-def extract_image_features_bmp(media: DataFrame) -> DataFrame:
-    """REAL image feature extraction over BMP blobs: Arrow-batched
-    mapInPandas, numpy decode per row, integer-exact mean luma
-    (milli-units of the Rec.601 weights computed in integer arithmetic,
-    so the output is deterministic and oracle-hashable)."""
-    import numpy as np
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "n_channels": [], "mean_luma": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                a = bmp_decode(bytes(blob))
-                h, w, c = a.shape
-                # integer Rec.601: (299 R + 587 G + 114 B) / 1000, summed
-                # exactly then floor-divided — no float accumulation.
-                s = a.astype(np.int64)
-                luma_sum = int(
-                    299 * s[:, :, 0].sum() + 587 * s[:, :, 1].sum() + 114 * s[:, :, 2].sum()
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(c)
-                out["mean_luma"].append(str(luma_sum // (h * w)))  # milli-luma
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_extract, schema=IMAGE_FEATURES_SCHEMA)
-
-
 AUDIO_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -339,6 +272,16 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_extract, schema=AUDIO_FEATURES_SCHEMA)
 
 
+RESIZED_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("blob", BinaryType()),
+    ]
+)
+
+
 def resize_images_bmp(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
     """REAL resize for BMP blobs: integer box-average downsample (each
     target pixel is the mean of its source box — antialiased thumbnail),
@@ -366,32 +309,6 @@ def resize_images_bmp(media: DataFrame, width: int = 8, height: int = 8) -> Data
             yield pd.DataFrame(out)
 
     return media.select("media_id", "blob").mapInPandas(fn, RESIZED_SCHEMA)
-
-
-def synthesize_bmp_blobs(df: DataFrame, id_col: str, size: int = 16) -> DataFrame:
-    """Deterministic BMP test-pattern generator (size x size gradient
-    keyed on the id) — lets the full encode->decode->extract pipeline run
-    on tables that carry no real media. Arrow-batched like the decoders."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid in pdf[id_col]:
-                g = np.arange(size, dtype=np.uint32)
-                r = ((g[:, None] * 255) // max(size - 1, 1)).astype(np.uint8)
-                r = np.repeat(r[:, :, None], 1, axis=2)
-                img = np.zeros((size, size, 3), dtype=np.uint8)
-                img[:, :, 0] = r[:, :, 0]                        # R: row gradient
-                img[:, :, 1] = r[:, :, 0].T                      # G: col gradient
-                img[:, :, 2] = int(mid) % 256                    # B: id-keyed
-                ids.append(int(mid))
-                blobs.append(bmp_encode(img))
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
-
-    return df.select(id_col).mapInPandas(
-        fn, schema="media_id long, blob binary"
-    )
 
 
 def synthesize_wav_blobs(
@@ -525,54 +442,6 @@ def png_decode_rgb8(blob: bytes):
             raise ValueError(f"unknown PNG filter type {ftype}")
         out[y] = rec.astype(np.uint8)
     return out.reshape(h, w, 3).copy()
-
-
-def synthesize_png_blobs(df: DataFrame, id_col: str, size: int = 16) -> DataFrame:
-    """The q157 BMP test pattern, containered as REAL PNGs — same pixel
-    content, so the closed-form luma oracle carries over and the
-    deflate+unfilter codec path is what the hash check exercises."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid in pdf[id_col]:
-                g = np.arange(size, dtype=np.uint32)
-                r = ((g[:, None] * 255) // max(size - 1, 1)).astype(np.uint8)
-                img = np.zeros((size, size, 3), dtype=np.uint8)
-                img[:, :, 0] = r[:, 0][:, None]
-                img[:, :, 1] = r[:, 0][None, :]
-                img[:, :, 2] = int(mid) % 256
-                ids.append(int(mid))
-                blobs.append(png_encode_rgb8(img))
-            yield pd.DataFrame({"media_id": ids, "blob": blobs})
-
-    return df.select(id_col).mapInPandas(fn, schema="media_id long, blob binary")
-
-
-def extract_image_features_png(media: DataFrame) -> DataFrame:
-    """REAL PNG feature extraction — identical integer Rec.601 milli-
-    luma reduction as the BMP path, through the deflate codec."""
-    import numpy as np
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "n_channels": [], "mean_luma": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                a = png_decode_rgb8(bytes(blob))
-                h, w, c = a.shape
-                s = a.astype(np.int64)
-                luma_sum = int(
-                    299 * s[:, :, 0].sum() + 587 * s[:, :, 1].sum() + 114 * s[:, :, 2].sum()
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(c)
-                out["mean_luma"].append(str(luma_sum // (h * w)))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_extract, schema=IMAGE_FEATURES_SCHEMA)
 
 
 def gif_encode_rgb8(arr) -> bytes:
@@ -761,8 +630,7 @@ def gif_decode_rgb8(blob: bytes):
 # block-constant inputs round-trip EXACTLY (only the DC coefficient is
 # nonzero: F00 = 8*(v-128) quantizes losslessly by 8 and the IDCT of a
 # DC-only block is constant to ~1e-13, far inside integer rounding).
-# That exactness is what lets q200 value-oracle a lossy codec. MP3 and
-# H.264 remain the documented environment stubs above.
+# That exactness is what lets q200 value-oracle a lossy codec.
 
 _JPEG_ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10,
@@ -1268,8 +1136,9 @@ def extract_image_features_codec(media: DataFrame, decode_fn) -> DataFrame:
     """Codec-agnostic REAL feature extraction: Arrow-batched
     mapInPandas, any bytes->(h, w, 3) decoder, integer Rec.601
     milli-luma (exact sums then one floor division — deterministic and
-    oracle-hashable). The per-codec wrappers above keep their names for
-    API stability; new codecs use this directly."""
+    oracle-hashable). Every image codec's feature stage is this call
+    with its decoder (bmp_decode, png_decode_rgb8, gif_decode_rgb8,
+    jpeg_decode_rgb8)."""
     import numpy as np
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,8 +1,12 @@
 """Time-windowed operators over event streams (SURVEY.md §2b X14-X15).
 
-Batch forms here (oracle-checkable); streaming forms in
-spark_lakehouse_medallion_pipeline_spark.streaming.jobs reuse the same aggregation bodies over
-readStream with watermarks.
+Every windowed aggregate has one body here. The batch queries (q20,
+q22, q47) call these functions directly; the streaming forms in
+spark_lakehouse_medallion_pipeline_spark.streaming.jobs apply a
+watermark to the readStream and call the same functions. All window
+totals are exact cents (functions.scalars.money over sum_cents), so a
+total does not depend on summation order and batch, stream and the
+DuckDB oracle agree bit for bit on bounded input.
 """
 
 from __future__ import annotations
@@ -10,17 +14,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_lakehouse_medallion_pipeline_spark.functions.scalars import money, sum_cents
+
 
 def tumbling_window_agg(
     events: DataFrame, ts_col: str = "ts", size: str = "1 hour"
 ) -> DataFrame:
     """Tumbling window rollup via F.window (X14). Output keyed by
-    window_start so the oracle can compute date_trunc equivalents."""
+    window_start so the oracle can compute date_trunc equivalents.
+    Batch only: countDistinct is not supported on streams."""
     return (
         events.groupBy(F.window(F.col(ts_col), size).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+            money(sum_cents(F.col("value"))).alias("total_value"),
             F.countDistinct("user_id").alias("n_users"),
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value", "n_users")
@@ -30,10 +37,14 @@ def tumbling_window_agg(
 def sliding_window_agg(
     events: DataFrame, ts_col: str = "ts", size: str = "2 hours", slide: str = "1 hour"
 ) -> DataFrame:
-    """Sliding window rollup (each event lands in size/slide windows)."""
+    """Sliding window rollup (each event lands in size/slide windows);
+    slide == size is a tumbling window without the distinct-user count."""
     return (
         events.groupBy(F.window(F.col(ts_col), size, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            money(sum_cents(F.col("value"))).alias("total_value"),
+        )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
@@ -44,14 +55,11 @@ def session_window_agg(
     """Native session windows (F.session_window, X15). Spark-specific
     operator — the SQL-expressible lag+cumsum equivalent lives in
     operators.relational.sessionize and is what the oracle checks."""
-    # Exact-cents aggregation (not round(sum(double))): bit-identical to
-    # any engine summing the same cents, independent of add order.
-    value_cents = F.round(F.col("value") * 100).cast("long")
     return (
         events.groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(value_cents).cast("double") / F.lit(100.0)).alias("session_value"),
+            money(sum_cents(F.col("value"))).alias("session_value"),
         )
         .select(
             key_col,

@@ -31,9 +31,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.functions.scalars import (
+    cents,
     count_if,
     floor_round,
     hex_bigint,
+    mean_cents,
+    money,
+    sum_cents,
 )
 from spark_lakehouse_medallion_pipeline_spark.operators import (
     dedup,
@@ -152,29 +156,11 @@ def _scratch_root() -> str:
 
 
 # --- exact-arithmetic helpers (see dialect rules above) ---------------------
+# The Column helpers (cents, sum_cents, money, mean_cents) live in
+# functions.scalars; these SQL-side macros are their oracle text, spelled
+# to match op-for-op.
 
 
-def cents(col: Column) -> Column:
-    """2-decimal double -> exact integer hundredths."""
-    return F.round(col * 100).cast("long")
-
-
-def sum_cents(col: Column) -> Column:
-    return F.sum(cents(col))
-
-
-def money(sum_cents_col: Column) -> Column:
-    """Exact cent-sum -> double dollars (single division, bit-stable)."""
-    return sum_cents_col.cast("double") / F.lit(100.0)
-
-
-def mean_cents(col: Column) -> Column:
-    """Exact-cents average: (sum_cents / n) / 100 — identical op chain in
-    the oracle."""
-    return sum_cents(col).cast("double") / F.count(F.lit(1)) / F.lit(100.0)
-
-
-# SQL-side macros (textual, spelled to match the Column helpers op-for-op)
 def SC(col: str) -> str:  # noqa: N802
     return f"CAST(ROUND(({col})*100) AS BIGINT)"
 
@@ -792,16 +778,7 @@ def q30_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling window via F.window (X14) — batch form of the streaming job."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money(sum_cents(F.col("value"))).alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value", "n_users")
-    )
+    return timeseries.tumbling_window_agg(_t(spark, sf_dir, "events"), size="1 hour")
 
 
 @_q(
@@ -1614,14 +1591,8 @@ def q47_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exactly two windows (the oracle replays that with a range(0,2)
     lateral). Spark's F.window expansion is scan-local; the shuffle is
     the windowed aggregate only."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money(sum_cents(F.col("value"))).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
+    return timeseries.sliding_window_agg(
+        _t(spark, sf_dir, "events"), size="2 hours", slide="1 hour"
     )
 
 
@@ -6557,16 +6528,19 @@ def q156_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pca_project(emb, model, id_col="vec_id")
 
 
-@_q(
-    "q157_bmp_image_features",
-    """
+# Closed-form oracle of the shared 16x16 test pattern
+# (multimodal._test_pattern): every lossless image codec (q157 BMP,
+# q176 PNG, q177 GIF) must decode it to this integer Rec.601 milli-luma.
+_Q157_LUMA_ORACLE = """
     SELECT doc_id AS media_id,
            16 AS width, 16 AS height, 3 AS n_channels,
            CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
              AS mean_luma
     FROM documents
-    """,
-)
+    """
+
+
+@_q("q157_bmp_image_features", _Q157_LUMA_ORACLE)
 def q157_bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, value-oracled (X21 upgraded from stub): BMP
     test patterns are synthesized per doc_id (16x16, R row-gradient /
@@ -6581,8 +6555,10 @@ def q157_bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = multimodal.synthesize_bmp_blobs(docs, "doc_id", size=16)
-    return multimodal.extract_image_features_bmp(blobs)
+    blobs = multimodal.synthesize_media_blobs(
+        docs, "doc_id", multimodal.bmp_encode, size=16
+    )
+    return multimodal.extract_image_features_codec(blobs, multimodal.bmp_decode)
 
 
 @_q(
@@ -7578,16 +7554,7 @@ def q175_behavior_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "q176_png_image_features",
-    """
-    SELECT doc_id AS media_id,
-           16 AS width, 16 AS height, 3 AS n_channels,
-           CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
-             AS mean_luma
-    FROM documents
-    """,
-)
+@_q("q176_png_image_features", _Q157_LUMA_ORACLE)
 def q176_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG decode, value-oracled — closes the PNG half of X21's
     stub note: the q157 test pattern is containered as actual PNGs
@@ -7601,20 +7568,15 @@ def q176_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = multimodal.synthesize_png_blobs(docs, "doc_id", size=16)
-    return multimodal.extract_image_features_png(blobs)
+    blobs = multimodal.synthesize_media_blobs(
+        docs, "doc_id", multimodal.png_encode_rgb8, size=16
+    )
+    return multimodal.extract_image_features_codec(
+        blobs, multimodal.png_decode_rgb8
+    )
 
 
-@_q(
-    "q177_gif_image_features",
-    """
-    SELECT doc_id AS media_id,
-           16 AS width, 16 AS height, 3 AS n_channels,
-           CAST((886 * 32640 + 29184 * (doc_id % 256)) // 256 AS VARCHAR)
-             AS mean_luma
-    FROM documents
-    """,
-)
+@_q("q177_gif_image_features", _Q157_LUMA_ORACLE)
 def q177_gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF decode, value-oracled — the third real image codec
     (after BMP q157 and PNG q176), built on a hand-rolled LZW: growing
@@ -18139,6 +18101,46 @@ _Q291_BATCH = 500
 _Q291_CRASH_BID = 3
 
 
+def _q291_source(spark: SparkSession) -> DataFrame:
+    """The offset-replay synthetic_docs stream the crash-recovery trio
+    (q291/q296/q299) drains."""
+    return (
+        spark.readStream.format("synthetic_docs")
+        .option("rows", str(_Q291_ROWS))
+        .option("batch", str(_Q291_BATCH))
+        .option("shards", "4")
+        .load()
+    )
+
+
+def _drain_stream(writer) -> str | None:
+    """Start the configured stream ``writer``, process all available
+    input and stop; return the failure text, or None on a clean drain."""
+    q = writer.start()
+    err: str | None = None
+    try:
+        q.processAllAvailable()
+    except Exception as e:  # noqa: BLE001 — failure IS the fixture
+        err = str(e)
+    finally:
+        ex = q.exception()
+        if ex is not None:
+            err = str(ex)
+        q.stop()
+    return err
+
+
+def _checkpoint_ids(ck: str, sub: str = "commits") -> list[int]:
+    """Sorted batch ids in checkpoint ``ck``'s ``sub`` log
+    (``offsets`` or ``commits``); empty before the first batch."""
+    import os
+
+    d = os.path.join(ck, sub)
+    if not os.path.isdir(d):
+        return []
+    return sorted(int(n) for n in os.listdir(d) if n.isdigit())
+
+
 @_q(
     "q291_stream_crash_recovery",
     f"""
@@ -18216,49 +18218,26 @@ def q291_stream_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pass
             raise RuntimeError("q291-injected-crash")
 
-    def _drain() -> str | None:
-        q = (
-            spark.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
-            .writeStream.foreachBatch(_write_batch)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
+    writer = (
+        _q291_source(spark)
+        .writeStream.foreachBatch(_write_batch)
+        .option("checkpointLocation", ck)
+    )
 
-    def _log_entries(sub: str) -> list[int]:
-        d = os.path.join(ck, sub)
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    e1 = _drain()
+    e1 = _drain_stream(writer)
     if e1 is None or "q291-injected-crash" not in e1:
         raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-    offsets_run1 = _log_entries("offsets")
-    commits_run1 = _log_entries("commits")
+    offsets_run1 = _checkpoint_ids(ck, "offsets")
+    commits_run1 = _checkpoint_ids(ck)
     if not offsets_run1:
         raise ValueError("restart would consume an EMPTY offset log")
     if commits_run1 != list(range(_Q291_CRASH_BID)):
         raise ValueError(f"unexpected run-1 commits: {commits_run1}")
 
-    e2 = _drain()
+    e2 = _drain_stream(writer)
     if e2 is not None:
         raise ValueError(f"restarted run failed: {e2!r:.300}")
-    commits_total = _log_entries("commits")
+    commits_total = _checkpoint_ids(ck)
     n_total = -(-_Q291_ROWS // _Q291_BATCH)
     if commits_total != list(range(n_total)):
         raise ValueError(f"incomplete drain after restart: {commits_total}")
@@ -18846,60 +18825,36 @@ def q296_stateful_stream_state_recovery(spark: SparkSession, sf_dir: str) -> Dat
                 pass
             raise RuntimeError("q296-injected-crash")
 
-    def _drain() -> str | None:
-        agg = (
-            spark.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_total"),
-                F.sum("bucket").cast("bigint").alias("bucket_sum"),
-            )
+    writer = (
+        _q291_source(spark)
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_total"),
+            F.sum("bucket").cast("bigint").alias("bucket_sum"),
         )
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(_write_batch)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
-
-    def _commits() -> list[int]:
-        d = os.path.join(ck, "commits")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
+        .writeStream.outputMode("update")
+        .foreachBatch(_write_batch)
+        .option("checkpointLocation", ck)
+    )
 
     _prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "32")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(_n_state))
-        e1 = _drain()
+        e1 = _drain_stream(writer)
         if e1 is None or "q296-injected-crash" not in e1:
             raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-        commits_run1 = _commits()
+        commits_run1 = _checkpoint_ids(ck)
         if commits_run1 != list(range(_Q291_CRASH_BID)):
             raise ValueError(f"unexpected run-1 commits: {commits_run1}")
-        e2 = _drain()
+        e2 = _drain_stream(writer)
         if e2 is not None:
             raise ValueError(f"restarted run failed: {e2!r:.300}")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
     n_total = -(-_Q291_ROWS // _Q291_BATCH)
-    if _commits() != list(range(n_total)):
-        raise ValueError(f"incomplete drain after restart: {_commits()}")
+    commits_total = _checkpoint_ids(ck)
+    if commits_total != list(range(n_total)):
+        raise ValueError(f"incomplete drain after restart: {commits_total}")
     n_replayed = sum(1 for b in set(calls) if calls.count(b) > 1)
     if calls.count(_Q291_CRASH_BID) != 2 or n_replayed != 1:
         raise ValueError(f"replay ledger wrong: {sorted(calls)}")
@@ -19360,39 +19315,16 @@ def q299_exactly_once_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pass
             raise RuntimeError("q299-injected-crash")
 
-    def _drain() -> str | None:
-        q = (
-            spark.readStream.format("synthetic_docs")
-            .option("rows", str(_Q291_ROWS))
-            .option("batch", str(_Q291_BATCH))
-            .option("shards", "4")
-            .load()
-            .writeStream.foreachBatch(_apply_batch)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        err: str | None = None
-        try:
-            q.processAllAvailable()
-        except Exception as e:  # noqa: BLE001 — failure IS the fixture
-            err = str(e)
-        finally:
-            ex = q.exception()
-            if ex is not None:
-                err = str(ex)
-            q.stop()
-        return err
+    writer = (
+        _q291_source(spark)
+        .writeStream.foreachBatch(_apply_batch)
+        .option("checkpointLocation", ck)
+    )
 
-    def _commits() -> list[int]:
-        d = os.path.join(ck, "commits")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    e1 = _drain()
+    e1 = _drain_stream(writer)
     if e1 is None or "q299-injected-crash" not in e1:
         raise ValueError(f"run 1 did not crash as injected: {e1!r:.300}")
-    commits_run1 = _commits()
+    commits_run1 = _checkpoint_ids(ck)
     if commits_run1 != list(range(_Q291_CRASH_BID)):
         raise ValueError(f"unexpected run-1 commits: {commits_run1}")
     versions_mid = snapshot_versions(tdir)
@@ -19401,12 +19333,13 @@ def q299_exactly_once_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"crash spot wrong: {len(versions_mid)} versions committed, "
             f"expected {_Q291_CRASH_BID + 1} (work done, offset not)"
         )
-    e2 = _drain()
+    e2 = _drain_stream(writer)
     if e2 is not None:
         raise ValueError(f"restarted run failed: {e2!r:.300}")
     n_total = -(-_Q291_ROWS // _Q291_BATCH)
-    if _commits() != list(range(n_total)):
-        raise ValueError(f"incomplete drain after restart: {_commits()}")
+    commits_total = _checkpoint_ids(ck)
+    if commits_total != list(range(n_total)):
+        raise ValueError(f"incomplete drain after restart: {commits_total}")
     versions = snapshot_versions(tdir)
     if len(versions) != n_total:
         raise ValueError(

@@ -19,7 +19,9 @@ columns so downstream reads get partition pruning for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_lakehouse_medallion_pipeline_spark.session import table_format
@@ -364,6 +366,22 @@ def write_zordered(
     Point/box predicates on EITHER column then prune most files via
     parquet min/max stats — vs a single-column sort which only prunes on
     its leading column. The z column is dropped before writing."""
+    _write_curve_clustered(df, path, cols, 1 << 16, zvalue2, num_files, mode)
+
+
+def _write_curve_clustered(
+    df: DataFrame,
+    path: str,
+    cols: tuple[str, str],
+    side: int,
+    curve: Callable[[Column, Column], Column],
+    num_files: int,
+    mode: str,
+) -> None:
+    """The body of every curve-clustered writer: bucketize each of
+    ``cols`` to ``side`` cells by min/max bounds, index the cell with
+    ``curve``, range-partition on the index, sort within partitions and
+    write without the helper column."""
     cx, cy = cols
     bounds = df.agg(
         F.min(cx).alias("_xmin"),
@@ -375,16 +393,16 @@ def write_zordered(
 
     def bucket(c: str, lo: str, hi: str) -> Column:
         span = (F.col(hi) - F.col(lo) + 1).cast("double")
-        return F.floor((F.col(c) - F.col(lo)).cast("double") * 65536.0 / span).cast(
-            "long"
-        )
+        return F.floor(
+            (F.col(c) - F.col(lo)).cast("double") * float(side) / span
+        ).cast("long")
 
-    z = b.withColumn("_z", zvalue2(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax")))
+    k = b.withColumn("_curve", curve(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax")))
     (
-        z.drop("_xmin", "_xmax", "_ymin", "_ymax")
-        .repartitionByRange(num_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
+        k.drop("_xmin", "_xmax", "_ymin", "_ymax")
+        .repartitionByRange(num_files, F.col("_curve"))
+        .sortWithinPartitions("_curve")
+        .drop("_curve")
         .write.mode(mode)
         .parquet(path)
     )
@@ -483,33 +501,7 @@ def write_hilbert_clustered(
     indexes is a connected, Manhattan-adjacent cell path, so each output
     file's (x, y) bounding box is tighter than the z-curve's power-of-
     two jumps allow, and 2-D range predicates prune more files."""
-    cx, cy = cols
-    side = 1 << order
-    bounds = df.agg(
-        F.min(cx).alias("_xmin"),
-        F.max(cx).alias("_xmax"),
-        F.min(cy).alias("_ymin"),
-        F.max(cy).alias("_ymax"),
-    )
-    b = df.crossJoin(F.broadcast(bounds))
-
-    def bucket(c: str, lo: str, hi: str) -> Column:
-        span = (F.col(hi) - F.col(lo) + 1).cast("double")
-        return F.floor(
-            (F.col(c) - F.col(lo)).cast("double") * float(side) / span
-        ).cast("long")
-
-    h = b.withColumn(
-        "_h", hilbert_udf(order)(bucket(cx, "_xmin", "_xmax"), bucket(cy, "_ymin", "_ymax"))
-    )
-    (
-        h.drop("_xmin", "_xmax", "_ymin", "_ymax")
-        .repartitionByRange(num_files, F.col("_h"))
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _write_curve_clustered(df, path, cols, 1 << order, hilbert_udf(order), num_files, mode)
 
 
 # --- Versioned snapshot tables (reader-safe commits without a catalog) -----

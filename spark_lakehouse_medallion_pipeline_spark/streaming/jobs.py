@@ -3,9 +3,11 @@
 The reference provisions an ``mdp-checkpoints`` bucket it never uses
 (k8s/s3/03-s3-buckets.yaml:33-39) — the unrealized streaming intention.
 Realized here: file-source streams over the events schema, watermarked
-tumbling/session window aggregates, checkpointed sinks. The aggregation
-bodies are shared with operators.timeseries so batch results (oracle-
-checked) and streaming results coincide on bounded input.
+tumbling/session window aggregates, checkpointed sinks. The window jobs
+apply a watermark and call the operators.timeseries body; the watermark
+is the only streaming-specific decision. Window totals are therefore
+exact cents, as in the batch queries, and batch results (oracle-checked)
+and streaming results coincide on bounded input.
 
 Tests drive these with trigger(availableNow=True) against the parquet
 corpus; production swaps source/sink URIs — the plan is identical.
@@ -23,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from spark_lakehouse_medallion_pipeline_spark.operators import timeseries
 
 EVENTS_SCHEMA = StructType(
     [
@@ -50,15 +54,11 @@ def windowed_counts_stream(
     events: DataFrame, watermark: str = "1 hour", size: str = "1 hour"
 ) -> DataFrame:
     """Watermarked tumbling-window aggregate: late rows beyond the
-    watermark are dropped; state is bounded by watermark horizon."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
+    watermark are dropped; state is bounded by watermark horizon. A
+    sliding window whose slide equals its size is the tumbling window
+    (timeseries.tumbling_window_agg's countDistinct is batch-only)."""
+    return timeseries.sliding_window_agg(
+        events.withWatermark("ts", watermark), size=size, slide=size
     )
 
 
@@ -67,19 +67,8 @@ def session_stream(
 ) -> DataFrame:
     """Watermarked session-window aggregate (F.session_window) — the
     streaming realization of operators.relational.sessionize."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
+    return timeseries.session_window_agg(
+        events.withWatermark("ts", watermark), "user_id", "ts", gap
     )
 
 
@@ -133,31 +122,15 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _ts_from_us(us):
+_NO_TOTALS = (0, 0.0, None)
+
+
+def _fold_totals(totals, pdf_iter):
+    """Fold pandas batches into a user's (n, total, last_us) state — the
+    one accumulator both stateful APIs below run."""
     import pandas as pd
 
-    return None if us is None else pd.Timestamp(us * 1000)
-
-
-def _running_totals_fn(key, pdf_iter, state):
-    """Per-user accumulator: state carries (count, value-sum, last-event
-    micros) across microbatches; emits one updated row per user per
-    batch. Timed-out state emits its final row and clears."""
-    import pandas as pd
-
-    if state.hasTimedOut:
-        (n, total, last_us) = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [_ts_from_us(last_us)],
-            }
-        )
-        return
-    n, total, last_us = state.get if state.exists else (0, 0.0, None)
+    n, total, last_us = totals
     for pdf in pdf_iter:
         n += len(pdf)
         total += float(pdf["value"].sum())
@@ -166,15 +139,35 @@ def _running_totals_fn(key, pdf_iter, state):
             mx_us = mx.value // 1000
             if last_us is None or mx_us > last_us:
                 last_us = mx_us
-    state.update((n, round(total, 6), last_us))
-    yield pd.DataFrame(
+    return n, round(total, 6), last_us
+
+
+def _totals_frame(key, totals):
+    """One RUNNING_TOTALS_SCHEMA row for ``key`` from its state."""
+    import pandas as pd
+
+    n, total, last_us = totals
+    return pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n],
-            "total_value": [round(total, 6)],
-            "last_ts": [_ts_from_us(last_us)],
+            "total_value": [total],
+            "last_ts": [None if last_us is None else pd.Timestamp(last_us * 1000)],
         }
     )
+
+
+def _running_totals_fn(key, pdf_iter, state):
+    """Per-user accumulator: state carries (count, value-sum, last-event
+    micros) across microbatches; emits one updated row per user per
+    batch. Timed-out state emits its final row and clears."""
+    if state.hasTimedOut:
+        totals = state.get
+        state.remove()
+    else:
+        totals = _fold_totals(state.get if state.exists else _NO_TOTALS, pdf_iter)
+        state.update(totals)
+    yield _totals_frame(key, totals)
 
 
 def stateful_running_totals_stream(events: DataFrame, expire_state: bool = False) -> DataFrame:
@@ -328,28 +321,11 @@ class _RunningTotalsProcessor(_SP):
         self._state = handle.getValueState("totals", _STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        n, total, last_us = (
-            tuple(self._state.get()) if self._state.exists() else (0, 0.0, None)
+        totals = _fold_totals(
+            tuple(self._state.get()) if self._state.exists() else _NO_TOTALS, rows
         )
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            mx = pdf["ts"].max()
-            if mx is not None and not pd.isna(mx):
-                mx_us = mx.value // 1000
-                if last_us is None or mx_us > last_us:
-                    last_us = mx_us
-        self._state.update((n, round(total, 6), last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 6)],
-                "last_ts": [_ts_from_us(last_us)],
-            }
-        )
+        self._state.update(totals)
+        yield _totals_frame(key, totals)
 
     def close(self) -> None:
         pass

@@ -43,17 +43,6 @@ def test_sample_frames_bounds(documents):
     assert len(per_media) == 10
 
 
-def test_resize_images_shapes(spark, documents):
-    from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
-
-    media = multimodal.wrap_as_media(documents.limit(20), "doc_id", "text", kind="image")
-    out = multimodal.resize_images(media, width=32, height=16).collect()
-    assert len(out) == 20
-    for r in out:
-        assert (r["width"], r["height"]) == (32, 16)
-        assert len(r["blob"]) == (32 * 16) // 8
-
-
 def test_binary_file_source_feeds_media_pipeline(spark, tmp_path):
     """binaryFile ingestion -> typed media schema -> mapInPandas features."""
     from spark_lakehouse_medallion_pipeline_spark.sources.io import read_binary_files
@@ -119,8 +108,9 @@ def test_image_and_audio_features_closed_form(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal as mm
 
     ids = spark.range(5, 8).selectExpr("id AS doc_id")
-    img = mm.extract_image_features_bmp(
-        mm.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    img = mm.extract_image_features_codec(
+        mm.synthesize_media_blobs(ids, "doc_id", mm.bmp_encode, size=16),
+        mm.bmp_decode,
     ).collect()
     for r in img:
         assert (r["width"], r["height"], r["n_channels"]) == (16, 16, 3)
@@ -199,11 +189,17 @@ def test_png_features_agree_with_bmp(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     ids = spark.range(1, 9).select(F.col("id").alias("doc_id"))
-    bmp = multimodal.extract_image_features_bmp(
-        multimodal.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    bmp = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.bmp_encode, size=16
+        ),
+        multimodal.bmp_decode,
     )
-    png = multimodal.extract_image_features_png(
-        multimodal.synthesize_png_blobs(ids, "doc_id", size=16)
+    png = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.png_encode_rgb8, size=16
+        ),
+        multimodal.png_decode_rgb8,
     )
     assert sorted(map(tuple, bmp.collect())) == sorted(map(tuple, png.collect()))
 
@@ -237,8 +233,11 @@ def test_gif_features_agree_with_bmp(spark):
     from spark_lakehouse_medallion_pipeline_spark.operators import multimodal
 
     ids = spark.range(1, 9).select(F.col("id").alias("doc_id"))
-    bmp = multimodal.extract_image_features_bmp(
-        multimodal.synthesize_bmp_blobs(ids, "doc_id", size=16)
+    bmp = multimodal.extract_image_features_codec(
+        multimodal.synthesize_media_blobs(
+            ids, "doc_id", multimodal.bmp_encode, size=16
+        ),
+        multimodal.bmp_decode,
     )
     gif = multimodal.extract_image_features_codec(
         multimodal.synthesize_media_blobs(

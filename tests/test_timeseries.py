@@ -64,6 +64,31 @@ def test_tumbling_and_sliding_cover_all_events(events):
     assert slid.agg(F.sum("n_events")).head()[0] == 2 * n
 
 
+def test_window_totals_exact_cents_in_any_row_order(spark):
+    """0.1, 0.2 and 2.675 in one window: round(sum(double), 2) returns
+    2.97 or 2.98 depending on the add order; the exact-cents total is
+    2.98 in every order, for every window kind."""
+    rows = [
+        (1, _ts("2024-01-01 10:00:00"), 0.1),
+        (1, _ts("2024-01-01 10:10:00"), 0.2),
+        (1, _ts("2024-01-01 10:20:00"), 2.675),
+    ]
+    exact = (10 + 20 + 268) / 100.0
+    aggs = {
+        "tumbling": (timeseries.tumbling_window_agg, "total_value"),
+        "sliding": (timeseries.sliding_window_agg, "total_value"),
+        "session": (timeseries.session_window_agg, "session_value"),
+    }
+    for name, (agg, col) in aggs.items():
+        totals = []
+        for order in (rows, rows[::-1]):
+            ev = spark.createDataFrame(
+                order, "user_id long, ts timestamp, value double"
+            ).coalesce(1)
+            totals.append({r[col] for r in agg(ev).collect()})
+        assert totals[0] == totals[1] == {exact}, (name, totals)
+
+
 def test_sessionize_gap_semantics(spark):
     df = spark.createDataFrame(
         [
